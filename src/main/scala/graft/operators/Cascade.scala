@@ -5,12 +5,22 @@ import org.apache.spark.sql.functions._
 
 /** The reference's three-stage entity-match cascade
   * (/root/reference/transform/entity_matching.py, SURVEY.md §2.4/§3.3),
-  * re-expressed as one lazy Spark DAG:
+  * re-expressed as one lazy Spark DAG. The pipeline
+  * ([[graft.pipeline.Pipeline.matchEntities]]) runs fuzzy matching and
+  * adjudication as ONE blocked pass:
   *
-  *   ruleMatches (J1 exact-key join) → residue (J3 anti-join)
-  *   → fuzzyMatches (J2 blocking semi-join + J4 blocked similarity join
-  *     + per-key argmax) → residue → llmMatches (J5, pluggable strategy)
+  *   ruleMatch (J1 exact-key join) → residue (J3 anti-join)
+  *   → blocked similarity join (J2/J4, each pair scored once)
+  *   → groupBy(left key): fuzzy argmax ([[argmaxOrder]]) + capped
+  *     candidate list
+  *       ├─ accepted argmax → fuzzy matches
+  *       └─ no accepted pair → LlmMatch.adjudicate (J5, pluggable
+  *          strategy) → LlmMatch.joinPicks
   *   → unionByName (U1).
+  *
+  * The primitives here also compose the staged form, rule → residue →
+  * [[fuzzyMatch]] → residue → LlmMatch → union, with the same result
+  * (CascadeParitySpec); the catalog queries use it.
   *
   * Scale notes (100 TB design):
   *   - The blocked fuzzy join is a plain equi-join on the blocking key, so
@@ -100,17 +110,24 @@ object Cascade {
     // combine, no sort shuffle — cheaper than window row_number at scale);
     // ordering key (-score, tieBreak...) == (score desc, tieBreak asc)
     val others = scored.columns.filter(_ != leftId).toSeq
-    val orderKey = struct(
-      (negate(col("match_score")) +: tieBreak.map(col)): _*)
     scored
       .groupBy(col(leftId))
-      .agg(min_by(struct(others.map(col): _*), orderKey).as("__best"))
+      .agg(min_by(struct(others.map(col): _*),
+        argmaxOrder(col("match_score"), tieBreak)).as("__best"))
       .select(col(leftId) +: others.map(c => col(s"__best.`$c`").as(c)): _*)
       .withColumn("match_method", lit("fuzzy"))
-      .withColumn("match_confidence",
-        when(col("match_score") >= cfg.fuzzyHighConfidence, "high")
-          .otherwise("medium"))
+      .withColumn("match_confidence", fuzzyConfidence(cfg.fuzzyHighConfidence))
   }
+
+  /** The argmax ordering of the fuzzy stage: `min_by` over this key picks
+    * the highest score, ties broken by the `tieBreak` columns ascending. */
+  def argmaxOrder(score: Column, tieBreak: Seq[String]): Column =
+    struct((negate(score) +: tieBreak.map(col)): _*)
+
+  /** Confidence label of an accepted fuzzy match, from its `match_score`. */
+  def fuzzyConfidence(highConfidence: Double): Column =
+    when(col("match_score") >= highConfidence, "high")
+      .otherwise("medium")
 
   /** U1 — union stage outputs with differing column sets, null-padding
     * (entity_matching.py:297, :57-66). */

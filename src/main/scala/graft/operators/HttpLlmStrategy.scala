@@ -29,11 +29,14 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * response shape is the public OpenAI-compatible chat-completions JSON;
   * the prompt is this library's own wording, not the reference's.
   *
-  * Scale shape: instances are shipped to executors by [[LlmMatch]];
-  * the HttpClient is @transient-lazy per executor JVM, candidate lists
-  * arrive pre-bounded (LlmMatch caps them before collect_list), and each
-  * partition issues its rows' calls serially — fan-out parallelism is the
-  * partition count, keeping request concurrency explicitly bounded.
+  * Scale shape: instances are shipped to executors by
+  * [[LlmMatch.adjudicate]]; the HttpClient is @transient-lazy per
+  * executor JVM, candidate lists arrive pre-bounded to
+  * [[LlmMatch.candidateCap]] by right key (`LlmMatch.apply` caps each
+  * left row's before collect_list; the pipeline's blocked pass caps each
+  * domain's, then splits them by company name), and each partition issues
+  * its rows' calls serially — fan-out parallelism is the partition count,
+  * keeping request concurrency explicitly bounded.
   */
 final class HttpLlmStrategy(
     endpoint: String,

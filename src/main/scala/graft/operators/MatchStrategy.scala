@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** J5 — the reference's optional LLM adjudication stage
@@ -37,63 +37,73 @@ final class DeterministicStub(floor: Double = 50.0) extends MatchStrategy {
 }
 
 object LlmMatch {
+  /** Cap on one left row's candidates, taken by right-key order: an
+    * external adjudicator's context window is finite. */
+  val candidateCap = 256
+
   /** Run the adjudication stage: for each left row, gather the blocked
     * candidate list, call the strategy, then equi-join the picked key back
     * to the right side (the reference's post-LLM ABN lookup).
     *
-    * Implementation is a blocked-join + `groupBy(leftId)` candidate
-    * collection (distributed; candidate lists stay bounded by block size),
-    * then one strategy call per left row inside executors.
+    * Implementation is a blocked-join + `groupBy(leftId, leftName)`
+    * candidate collection (distributed; candidate lists are capped), then
+    * [[adjudicate]] and [[joinPicks]] — one lazy query, no RDD round trip.
     */
   def apply(
-      spark: SparkSession,
       left: DataFrame, right: DataFrame, blockKey: String,
       leftId: String, leftName: String,
       rightKey: String, rightName: String,
       strategy: MatchStrategy,
-      llmScore: Double = 95.0,
-      maxCandidates: Int = 256): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
+      llmScore: Double = 95.0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
 
     // candidate lists are bounded (deterministically, by right key) BEFORE
-    // collect_list: an external adjudicator's context window is finite,
-    // and an unbounded hot block would otherwise balloon a single row
+    // collect_list: an unbounded hot block would otherwise balloon a row
     val w = Window.partitionBy(col(leftId)).orderBy(col(rightKey).asc)
     val candidates = left.select(col(leftId), col(leftName), col(blockKey))
       .join(right.select(col(rightKey), col(rightName), col(blockKey)),
         Seq(blockKey), "inner")
       .withColumn("__cand_rank", row_number().over(w))
-      .filter(col("__cand_rank") <= maxCandidates)
+      .filter(col("__cand_rank") <= candidateCap)
       .groupBy(col(leftId), col(leftName))
       .agg(collect_list(struct(col(rightKey).cast("string").as("k"),
         col(rightName).cast("string").as("n"))).as("cands"))
 
-    val pickSchema = StructType(Seq(
-      StructField("__left_id", StringType),
-      StructField("__picked_key", StringType)))
-    val picksRdd = candidates.rdd.mapPartitions { it =>
+    // the reference's post-LLM lookup joins on the returned key alone
+    // (entity_matching.py:236-237); the right side's copy of the blocking
+    // column is redundant in the output. Dropped BEFORE the key join:
+    // `right` already feeds the candidates, so `right(blockKey)` would be
+    // an ambiguous reference after it.
+    joinPicks(left, adjudicate(candidates, strategy), right.drop(blockKey),
+      leftId, rightKey, llmScore)
+  }
+
+  /** The in-plan strategy step: rows of (left id, left name,
+    * cands: array<struct<k: string, n: string>>) in, one
+    * (`__left_id`, `__picked_key`) string row out per non-abstaining call.
+    * A `Dataset.mapPartitions` inside the query — the external call stays
+    * out of Catalyst expressions, and no RDD round trip runs at build
+    * time. */
+  def adjudicate(candidates: DataFrame, strategy: MatchStrategy): DataFrame =
+    candidates.mapPartitions { it =>
       it.flatMap { row =>
         val id = Option(row.get(0)).map(_.toString).orNull
-        val name = row.getAs[String](1)
         val cands = row.getSeq[Row](2).map(r => (r.getString(0), r.getString(1)))
-        strategy.adjudicate(name, cands).map(k => Row(id, k))
+        strategy.adjudicate(row.getString(1), cands).map(k => (id, k))
       }
-    }
-    val picks = spark.createDataFrame(picksRdd, pickSchema)
+    }(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      .toDF("__left_id", "__picked_key")
 
+  /** Realize picks as LLM-stage matches: each pick joins every left row
+    * with its id, and every right row whose key is the picked key. */
+  def joinPicks(left: DataFrame, picks: DataFrame, right: DataFrame,
+      leftId: String, rightKey: String, llmScore: Double): DataFrame =
     left.join(picks,
         left(leftId).cast("string") === picks("__left_id"), "inner")
       .join(right,
         picks("__picked_key") === right(rightKey).cast("string"), "inner")
-      // the reference's post-LLM lookup joins on the returned key alone
-      // (entity_matching.py:236-237); the right side's copy of the blocking
-      // column is redundant in the output
-      .drop(right(blockKey))
       .drop("__left_id", "__picked_key")
       .withColumn("match_method", lit("LLM"))
       .withColumn("match_score", lit(llmScore))
       .withColumn("match_confidence", lit("medium"))
-  }
 }

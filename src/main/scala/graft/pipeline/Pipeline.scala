@@ -42,18 +42,23 @@ object Pipeline {
   /** pre_dwh → dwh: the full match cascade (SURVEY.md §3.3) over cleaned
     * frames with the reference's column contract
     * (crawl: domain/company_name/abn/postcode,
-    *  abr: abn/entity_name/entity_type/state/postcode). */
+    *  abr: abn/entity_name/entity_type/state/postcode).
+    *
+    * Fuzzy matching and adjudication share ONE blocked pass: the rule
+    * residue is joined to ABR on the postcode block and scored once, and
+    * one `groupBy(crawl_domain)` yields both the fuzzy argmax and the
+    * capped candidate list that a domain with no accepted pair hands to
+    * the strategy. The same result as the staged cascade
+    * (rule → residue → fuzzy → residue → LLM), in fewer jobs. */
   def matchEntities(spark: SparkSession, cleanedCrawl: DataFrame,
       cleanedAbr: DataFrame, cfg: Config = Config()): DataFrame = {
-    // Each cascade stage reads the cleaned frames AND the prior stages
-    // (residue anti-joins), so without materialization the regex-heavy
-    // cleaning + dedup exchanges re-execute once PER BRANCH of the
-    // final union (rule, fuzzy, llm, and both residue chains — the
-    // optimizer does not reuse exchanges across them). Lazy
-    // localCheckpoints make each shared frame compute exactly once per
-    // action (guide §3.3 "materialise an intermediate to truncate the
-    // plan"); the blocks are corpus-proportional — the same bytes any
-    // ONE branch already materialized in its shuffles.
+    // The cleaned frames are the only pins. Every stage reads them, so
+    // unpinned, the regex-heavy cleaning + dedup exchanges would re-run
+    // in each branch of the final union; lazy localCheckpoints compute
+    // each exactly once per action. Everything downstream is one lazy
+    // query: pinning the rule or fuzzy stage, or running the strategy
+    // through an RDD, executes stages while the plan is built and
+    // multiplies jobs and codegen per shard.
     val crawl = cleanedCrawl.select(
       col("domain").as("crawl_domain"),
       col("company_name").as("crawl_company_name"),
@@ -70,54 +75,64 @@ object Pipeline {
     val rule = Cascade.ruleMatch(
       crawl.filter(col("crawl_abn").isNotNull),
       abr.filter(col("abr_abn").isNotNull), "crawl_abn", "abr_abn")
-      .localCheckpoint(false)
 
-    // J3 — residue keyed on domain (entity_matching.py:172-173)
-    val afterRule = Cascade.residue(crawl, rule, "crawl_domain", "crawl_domain")
-
-    // J2+J4 — postcode-blocked token_sort_ratio fuzzy join, global argmax
-    val fuzzyLeft = afterRule
+    // J3 — residue keyed on domain (entity_matching.py:172-173), blocked
+    val left = Cascade.residue(crawl, rule, "crawl_domain", "crawl_domain")
       .withColumnRenamed("crawl_postcode", "block")
       .filter(col("block").isNotNull)
-    val fuzzyRight = abr.withColumnRenamed("abr_postcode", "block")
+    val right = abr.withColumnRenamed("abr_postcode", "block")
       .filter(col("block").isNotNull)
-    val fuzzy = Cascade.fuzzyMatch(
-        fuzzyLeft, fuzzyRight, "block",
-        exprs.token_sort_ratio(col("crawl_company_name"), col("abr_company_name")),
-        "crawl_domain", Seq("abr_abn"),
-        Cascade.MatchConfig(cfg.fuzzyAcceptThreshold, cfg.fuzzyHighConfidence))
-      .withColumn("crawl_postcode", col("block"))
-      .withColumn("abr_postcode", col("block"))
-      .drop("block")
-      .localCheckpoint(false)
 
-    // NOT checkpointed (measured 2.5 → 3.4 s when tried): the llm
-    // stage's candidate gather reads only 3 columns of this frame, and
-    // a checkpoint would materialize every column, defeating pruning —
-    // the residue recompute over the checkpointed inputs is cheaper
-    val afterFuzzy = Cascade.residue(afterRule, fuzzy,
-      "crawl_domain", "crawl_domain")
+    // J2+J4 — postcode-blocked token_sort_ratio scores, once per pair. Per
+    // domain (across all of its rows): the fuzzy argmax over the accepted
+    // pairs, and for J5 its first `LlmMatch.candidateCap` pairs by ABN
+    // (capped per domain, before the split by company name)
+    val pairCols = Seq("block", "crawl_company_name", "crawl_abn", "abr_abn",
+      "abr_company_name", "abr_entity_type", "abr_state", "match_score")
+    val best = min_by(struct(pairCols.map(col): _*),
+      when(col("match_score") >= cfg.fuzzyAcceptThreshold,
+        Cascade.argmaxOrder(col("match_score"), Seq("abr_abn")))).as("best")
+    val cands = slice(array_sort(collect_list(struct(
+        col("abr_abn").as("k"), col("abr_company_name").as("n"),
+        col("crawl_company_name").as("name")))),
+      1, LlmMatch.candidateCap).as("cands")
+    val perDomain = left.join(right, Seq("block"), "inner")
+      .withColumn("match_score", exprs.token_sort_ratio(
+        col("crawl_company_name"), col("abr_company_name")))
+      .groupBy(col("crawl_domain"))
+      .agg(best, (if (cfg.enableLlm) Seq(cands) else Nil): _*)
 
-    // J5 — optional external adjudication within the postcode block
+    val fuzzy = perDomain.filter(col("best").isNotNull)
+      .select(col("crawl_domain") +:
+        pairCols.map(c => col(s"best.$c").as(c)): _*)
+      .withColumn("match_method", lit("fuzzy"))
+      .withColumn("match_confidence",
+        Cascade.fuzzyConfidence(cfg.fuzzyHighConfidence))
+
+    // J5 — optional external adjudication of the domains with no accepted
+    // pair: one strategy call per (domain, company name) over that name's
+    // candidates, the picked ABN joined back to the blocked ABR rows
     val llm =
       if (!cfg.enableLlm) None
       else Some {
-        LlmMatch(spark,
-            afterFuzzy.withColumnRenamed("crawl_postcode", "block")
-              .filter(col("block").isNotNull),
-            abr.withColumnRenamed("abr_postcode", "block")
-              .filter(col("block").isNotNull),
-            "block", "crawl_domain", "crawl_company_name",
-            "abr_abn", "abr_company_name",
-            cfg.llmStrategy, cfg.llmScore)
-          .withColumn("crawl_postcode", col("block"))
-          .withColumn("abr_postcode", col("block"))
-          .drop("block")
+        val perName = perDomain.filter(col("best").isNull)
+          .select(col("crawl_domain"), col("cands"), explode(array_distinct(
+            transform(col("cands"), _("name")))).as("crawl_company_name"))
+          .select(col("crawl_domain"), col("crawl_company_name"),
+            transform(
+              filter(col("cands"), _("name") <=> col("crawl_company_name")),
+              c => struct(c("k").as("k"), c("n").as("n"))).as("cands"))
+        LlmMatch.joinPicks(left,
+          LlmMatch.adjudicate(perName, cfg.llmStrategy), right.drop("block"),
+          "crawl_domain", "abr_abn", cfg.llmScore)
       }
 
     // U1 + K4 — union stages, stamp load timestamps, project the dwh shape
-    val stages = Seq(rule, fuzzy) ++ llm.toSeq
-    Cascade.unionStages(stages)
+    val blockedStages = (fuzzy +: llm.toSeq).map(_
+      .withColumn("crawl_postcode", col("block"))
+      .withColumn("abr_postcode", col("block"))
+      .drop("block"))
+    Cascade.unionStages(rule +: blockedStages)
       .withColumn("match_score",
         col("match_score").cast("decimal(5,2)")) // ddl_scripts.sql:87
       .withColumn("created_at", current_timestamp())

@@ -19,11 +19,11 @@ class CascadeEdgeSpec extends AnyFunSuite {
     val abstain = new MatchStrategy {
       override def adjudicate(n: String, cands: Seq[(String, String)]) = None
     }
-    val got = LlmMatch(spark, left, right, "block", "domain", "name",
+    val got = LlmMatch(left, right, "block", "domain", "name",
       "abn", "rname", abstain)
     assert(got.count() == 0)
     // and the stub with an impossible floor behaves the same
-    val neverFloor = LlmMatch(spark, left, right, "block", "domain", "name",
+    val neverFloor = LlmMatch(left, right, "block", "domain", "name",
       "abn", "rname", new DeterministicStub(floor = 101.0))
     assert(neverFloor.count() == 0)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,16 +8,10 @@ import graft.functions.AbnKernel
 import graft.operators.DeterministicStub
 import graft.pipeline.Pipeline
 
-/** End-to-end cascade test on a company-shaped corpus (SURVEY.md §5.1,
-  * FIXTURES.md B3): seeded synthetic ABR rows, each with three crawl-side
-  * variants carrying an expected match stage — the assertion-bearing
-  * version of the reference's printed corpus
-  * (/root/reference/test/entity_matching_test.py, which has no asserts).
-  */
-class CascadeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.session
-  import spark.implicits._
-
+/** The company-shaped cascade corpus (SURVEY.md §5.1, FIXTURES.md B3):
+  * 19 seeded synthetic ABR rows, each with three crawl-side variants
+  * carrying an expected match stage. */
+object CascadeCorpus {
   private val rng = new scala.util.Random(42)
   private def validAbn(): String =
     Iterator.continually("%011d".format(math.abs(rng.nextLong()) % 100000000000L))
@@ -32,33 +27,49 @@ class CascadeSpec extends AnyFunSuite {
     "Brewing", "Fencing", "Surveying")
 
   /** 19 seed ABR companies: distinct postcodes so each blocks alone. */
-  private case class Seed(abn: String, name: String, postcode: String,
+  final case class Seed(abn: String, name: String, postcode: String,
     state: String, idx: Int)
-  private val seeds: Seq[Seed] = (0 until 19).map { i =>
+  val seeds: Seq[Seed] = (0 until 19).map { i =>
     Seed(validAbn(), s"${firstWords(i)} ${midWords(i)} Group Pty Ltd",
       (2000 + i).toString, "NSW", i)
   }
 
-  private def abrDf = seeds.map(s =>
-      (s.abn, s.name, "Australian Private Company", s.state, s.postcode))
-    .toDF("abn", "entity_name", "entity_type", "state", "postcode")
+  def abrDf(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    seeds.map(s =>
+        (s.abn, s.name, "Australian Private Company", s.state, s.postcode))
+      .toDF("abn", "entity_name", "entity_type", "state", "postcode")
+  }
 
   // crawl variants (entity_matching_test.py:44-86 semantics):
   //   exact  — same name + valid ABN → rule_based_abn, score 100, high
   //   fuzzy  — word dropped + '&'-joined + no ABN → fuzzy, 80 ≤ score
   //   abbrev — first+last word only, no ABN → LLM stub, 95, medium
-  private def crawlDf = seeds.flatMap { s =>
-    val slug = s.name.toLowerCase.replaceAll("[^a-z0-9]+", "-")
-    val words = s.name.split(" ")
-    Seq(
-      (s"$slug-exact.com.au", s.name, s.abn, s.postcode),
-      (s"$slug-fuzzy.com.au",
-        s"${words(0)} ${words(1)} Group Ltd", null, s.postcode),
-      (s"$slug-abbrev.com.au", s"${words(0)} ${words.last}", null, s.postcode))
-  }.toDF("domain", "company_name", "abn", "postcode")
+  def crawlDf(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    seeds.flatMap { s =>
+      val slug = s.name.toLowerCase.replaceAll("[^a-z0-9]+", "-")
+      val words = s.name.split(" ")
+      Seq(
+        (s"$slug-exact.com.au", s.name, s.abn, s.postcode),
+        (s"$slug-fuzzy.com.au",
+          s"${words(0)} ${words(1)} Group Ltd", null, s.postcode),
+        (s"$slug-abbrev.com.au", s"${words(0)} ${words.last}", null, s.postcode))
+    }.toDF("domain", "company_name", "abn", "postcode")
+  }
+}
+
+/** End-to-end cascade test on [[CascadeCorpus]] — the assertion-bearing
+  * version of the reference's printed corpus
+  * (the reference's test/entity_matching_test.py, which has no asserts).
+  */
+class CascadeSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.session
+  import CascadeCorpus.seeds
 
   private lazy val result = Pipeline.matchEntities(spark,
-    Pipeline.cleanCrawl(crawlDf), Pipeline.cleanAbr(abrDf),
+    Pipeline.cleanCrawl(CascadeCorpus.crawlDf(spark)),
+    Pipeline.cleanAbr(CascadeCorpus.abrDf(spark)),
     Pipeline.Config(enableLlm = true, llmStrategy = new DeterministicStub(30.0)))
     .cache()
 

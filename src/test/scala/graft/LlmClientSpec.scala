@@ -164,7 +164,7 @@ class LlmClientSpec extends AnyFunSuite {
         .toDF("crawl_id", "crawl_name", "block")
       val right = Seq((1L, "Acme Widgets", "B1"), (2L, "Harbour Mining Group", "B1"))
         .toDF("abr_id", "abr_name", "block")
-      val got = LlmMatch(spark, left, right, "block",
+      val got = LlmMatch(left, right, "block",
           "crawl_id", "crawl_name", "abr_id", "abr_name",
           new HttpLlmStrategy(ep))
         .select("crawl_id", "abr_id", "match_method", "match_score")

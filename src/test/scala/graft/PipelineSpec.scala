@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,5 +68,46 @@ class PipelineSpec extends AnyFunSuite {
     val back = spark.read.parquet(p)
     assert(back.count() == 2)
     assert(back.select("match_method").distinct().count() == 2)
+  }
+
+  /** Jobs that `f` starts from this thread. Listener events arrive in
+    * order, so once a marker job run after `f` is seen, every job of `f`
+    * has been counted. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("pipeline-guard") => jobs.incrementAndGet()
+          case Some("pipeline-guard-drain") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("pipeline-guard", "counted")
+      f
+      sc.setJobGroup("pipeline-guard-drain", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus not drained")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("one write of the ER pipeline stays within its job budget") {
+    val out = java.nio.file.Files.createTempDirectory("dwh").toString + "/m"
+    val jobs = jobsOf {
+      Pipeline.run(spark, CascadeCorpus.abrDf(spark),
+          CascadeCorpus.crawlDf(spark), Pipeline.Config(enableLlm = true))
+        .write.parquet(out)
+    }
+    // 13 measured (local[4], 4 shuffle partitions); the staged cascade,
+    // with its rule/fuzzy pins and eager RDD hop, took 23
+    assert(jobs > 0 && jobs <= 14, s"$jobs jobs")
   }
 }
